@@ -19,19 +19,26 @@ Re-expression of the reference's second engine
     (ClpString — ClpString packs (logtype id, offset into a shared var
     stream) in the reference: ColumnWriter.hpp:185-194).
 
-Spark shape: one Arrow pass parses + tokenizes, distinct aggregations
-build the node / logtype / var dictionaries with deterministic
-value-sorted IDs (shared machinery with dicts.build), and a second pass
-encodes. Fast path: dictionaries driver-collected (CLP's own model;
-MPTs are small) and applied as broadcast maps in one Arrow pass.
-Above `driver_dict_cap` the build switches to the FULLY DISTRIBUTED
-path (the reference builds incrementally at any cardinality:
-clp_s/ArchiveWriter.cpp:370-440, SchemaMap.cpp): IDs come from the same
-two-pass range-partitioned rank as the unstructured engine
-(dicts/build.py assign_stable_ids — value-sorted ranks, identical to
-the driver path's IDs at any cluster size), and the encode becomes
-dictionary joins + a per-record regroup. Both paths produce
-byte-identical archives.
+Spark shape (fast path): two passes over one localCheckpoint of the
+projected input (passthrough + JSON text): 3 Spark jobs per
+encode+save, plus one when `spread` must widen a narrow input.
+Pass 1 parses every record and emits the distinct dictionary candidates
+of four kinds (merged-parse-tree nodes, ClpString logtypes, dictionary
+values, present-node sets), deduped per partition and then globally, in
+one collect. The driver ranks them into value-sorted IDs (CLP's own
+model: MPTs and dictionaries are small) and pass 2 re-parses the JSON
+text and encodes it straight to schema_id / node_ids / jvals with the
+maps broadcast — the typed leaves never cross the Arrow boundary. The
+driver already holds the dictionaries, so save() writes them with
+pyarrow and only the encoded table is a Spark write.
+When any candidate kind exceeds `driver_dict_cap` the build switches to
+the FULLY DISTRIBUTED path (the reference builds incrementally at any
+cardinality: clp_s/ArchiveWriter.cpp:370-440, SchemaMap.cpp): IDs come
+from the same two-pass range-partitioned rank as the unstructured
+engine (dicts/build.py assign_stable_ids — value-sorted ranks, identical
+to the driver path's IDs at any cluster size), and the encode becomes
+dictionary joins + a per-record regroup. Both paths produce the same
+archive rows.
 
 Key paths join nested keys with '.' — records whose keys contain '.'
 would alias (documented v1 limitation; the reference uses structured
@@ -49,6 +56,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from clp_spark.config import VT_DICT
 from clp_spark.parse.tokenizer import parse_one
+from clp_spark.util import spread, write_driver_table
 
 NODE_INT = 0
 NODE_FLOAT = 1
@@ -275,13 +283,37 @@ def _walk(
         raise TypeError(f"unsupported JSON value: {type(obj)}")
 
 
+def _record_leaves(s: str, structurize: bool) -> list:
+    """One JSON record's text → its typed leaves (see _walk)."""
+    obj, fast = _loads(s)
+    if not isinstance(obj, dict):
+        # a top-level array/scalar would flatten to a leaf with path ""
+        # and reconstruct as {"": value} — silent corruption. The
+        # reference ingests records (objects); reject loudly instead.
+        raise ValueError(
+            "clp_s encoding requires top-level JSON objects; "
+            f"got {type(obj).__name__}: {str(s)[:80]!r}"
+        )
+    rec: list = []
+    _walk(obj, "", rec, structurize, fast)
+    return rec
+
+
+def _ddl(df: DataFrame, names) -> list[str]:
+    """DDL fields of `df`'s columns in `names`, in `df`'s column order."""
+    return [
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name in names
+    ]
+
+
 def _parse_records(
-    df: DataFrame,
+    src: DataFrame,
     json_col: str,
     passthrough: list[str],
     structurize: bool = False,
 ) -> DataFrame:
-    """Arrow pass 1: JSON text → typed leaves (+ ClpString tokenization)."""
+    """JSON text → passthrough + a typed `leaves` array (+ ClpString
+    tokenization): the row shape the distributed build joins over."""
     fields = []
     for part in _LEAF_SCHEMA.split(", "):
         name, typ = part.split(" ", 1)
@@ -291,32 +323,15 @@ def _parse_records(
     # a naive prefix-join would emit a leading-comma DDL string that
     # mapInPandas' schema parser rejects
     out_schema = ", ".join(
-        [
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.schema
-            if f.name in passthrough
-        ]
-        + [f"leaves array<struct<{','.join(fields)}>>"]
+        _ddl(src, passthrough) + [f"leaves array<struct<{','.join(fields)}>>"]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             leaves_col = []
             for s in pdf[json_col]:
-                rec: list = []
-                obj, fast = _loads(s)
-                if not isinstance(obj, dict):
-                    # a top-level array/scalar would flatten to a leaf
-                    # with path "" and reconstruct as {"": value} —
-                    # silent corruption. The reference ingests records
-                    # (objects); reject loudly at parse time instead.
-                    raise ValueError(
-                        "clp_s encoding requires top-level JSON objects; "
-                        f"got {type(obj).__name__}: {str(s)[:80]!r}"
-                    )
-                _walk(obj, "", rec, structurize, fast)
                 rows = []
-                for path, tag, ival, sval, clp in rec:
+                for path, tag, ival, sval, clp in _record_leaves(s, structurize):
                     if clp is None:
                         rows.append((path, tag, ival, sval, None, None, None, None))
                     else:
@@ -327,11 +342,7 @@ def _parse_records(
             out["leaves"] = leaves_col
             yield out
 
-    from clp_spark.util import spread
-
-    return spread(df.select(*dict.fromkeys(passthrough + [json_col]))).mapInPandas(
-        run, schema=out_schema
-    )
+    return src.mapInPandas(run, schema=out_schema)
 
 
 class JsonArchive:
@@ -341,7 +352,7 @@ class JsonArchive:
 
     def __init__(self, encoded, tree, schema_map, logtype_dict, var_dict,
                  node_map, schema_ids, range_index=None,
-                 range_index_idx_col=None):
+                 range_index_idx_col=None, dict_tables=None):
         self.encoded = encoded            # DF: passthrough + schema_id + node_ids + jvals
         self.tree = tree                  # DF: node_id, path, tag
         self.schema_map = schema_map      # DF: schema_id, node_ids
@@ -349,6 +360,10 @@ class JsonArchive:
         self.var_dict = var_dict          # DF: var_id, value
         self.node_map = node_map          # {(path, tag): node_id}
         self.schema_ids = schema_ids      # {tuple(node_ids): schema_id}
+        # {saved table name: pyarrow.Table} of the four dictionaries —
+        # held only by a freshly encoded fast-path archive (the driver
+        # already built them), so save() writes them without Spark
+        self.dict_tables = dict_tables
         # metadata range index (RangeIndexEntry analog,
         # archive_constants.hpp:40-45): per source file, the metadata
         # fields + the contiguous [idx_min, idx_max] row-index range it
@@ -368,14 +383,20 @@ class JsonArchive:
             .partitionBy("schema_id")
             .parquet(os.path.join(out_dir, "tables"))
         )
-        self.tree.write.mode("overwrite").parquet(os.path.join(out_dir, "schema_tree"))
-        self.schema_map.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "schema_map")
-        )
-        self.logtype_dict.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "log_dict")
-        )
-        self.var_dict.write.mode("overwrite").parquet(os.path.join(out_dir, "var_dict"))
+        if self.dict_tables is not None:
+            # unique-keyed columns: a parquet dictionary page only adds bytes
+            for name, tbl in self.dict_tables.items():
+                write_driver_table(
+                    tbl, os.path.join(out_dir, name), use_dictionary=False
+                )
+        else:
+            for name, frame in (
+                ("schema_tree", self.tree),
+                ("schema_map", self.schema_map),
+                ("log_dict", self.logtype_dict),
+                ("var_dict", self.var_dict),
+            ):
+                frame.write.mode("overwrite").parquet(os.path.join(out_dir, name))
         # the column index is DERIVED from the schema tree just written:
         # rebuild it now so re-saving into an existing directory can
         # never leave a stale index that would let search_archives_kql
@@ -428,6 +449,41 @@ class JsonArchive:
             range_index=range_index,
             range_index_idx_col=range_idx_col,
         )
+
+
+def _dictionary_tables(
+    node_map: dict, schema_ids: dict, lt_map: dict, v_map: dict
+) -> dict:
+    """The four dictionary tables as pyarrow Tables keyed by their saved
+    name, each built straight from its driver map (no row list)."""
+    import pyarrow as pa
+
+    def ids(m: dict):
+        return pa.array(m.values(), pa.int64(), size=len(m))
+
+    def keys(m: dict, typ, part: int | None = None):
+        it = iter(m) if part is None else (k[part] for k in m)
+        return pa.array(it, typ, size=len(m))
+
+    return {
+        "schema_tree": pa.table(
+            {
+                "node_id": ids(node_map),
+                "path": keys(node_map, pa.string(), 0),
+                "tag": keys(node_map, pa.int32(), 1),
+            }
+        ),
+        "schema_map": pa.table(
+            {
+                "schema_id": ids(schema_ids),
+                "node_ids": keys(schema_ids, pa.list_(pa.int64())),
+            }
+        ),
+        "log_dict": pa.table(
+            {"logtype_id": ids(lt_map), "logtype": keys(lt_map, pa.string())}
+        ),
+        "var_dict": pa.table({"var_id": ids(v_map), "value": keys(v_map, pa.string())}),
+    }
 
 
 def build_range_index(
@@ -508,157 +564,151 @@ def encode_json_df(
         a.range_index_idx_col = range_index_idx_col if _ri else None
         return a
 
-    # localCheckpoint: materialized once for the (up to 5) passes below;
-    # storage reclaimed when the archive's plans are GC'd (no persist pin)
-    parsed = _parse_records(
-        df, json_col, passthrough, structurize_arrays
-    ).localCheckpoint(eager=False)
-
-    ex = parsed.select(F.explode("leaves").alias("l"))
-
-    # ---- merged parse tree: distinct (path, tag) → value-sorted node ids
-    node_rows = (
-        ex.select("l.key", "l.tag").distinct().limit(driver_dict_cap + 1).collect()
-    )
-    if len(node_rows) > driver_dict_cap:
-        return _finish(
-            _encode_json_distributed(parsed, passthrough, driver_dict_cap)
-        )
-    node_map = {
-        (r["key"], r["tag"]): i
-        for i, r in enumerate(
-            sorted(node_rows, key=lambda r: (r["key"], r["tag"]))
-        )
-    }
-    tree = spark.createDataFrame(
-        [(v, k[0], k[1]) for k, v in node_map.items()],
-        "node_id long, path string, tag int",
+    # localCheckpoint: the projected input is materialized once (by the
+    # candidate pass) and re-read by the encode pass or the fallback;
+    # storage is reclaimed when the archive's plans are GC'd
+    src = spread(df.select(*dict.fromkeys(passthrough + [json_col]))).localCheckpoint(
+        eager=False
     )
 
-    # ---- logtype dict (ClpString templates) + var dict (VarString/Array
-    # whole values ∪ ClpString dictionary variables)
-    lt_rows = (
-        ex.filter(F.col("l.tag") == NODE_CLPSTR)
-        .select(F.col("l.logtype").alias("logtype"))
-        .distinct()
-        .limit(driver_dict_cap + 1)
-        .collect()
-    )
-    var_whole = ex.filter(
-        F.col("l.tag").isin([NODE_VARSTR, NODE_ARRAY, NODE_BIGNUM, NODE_FMTFLOAT])
-    ).select(F.col("l.sval").alias("value"))
-    var_clp = (
-        ex.filter(F.col("l.tag") == NODE_CLPSTR)
-        .select(F.explode(F.arrays_zip("l.var_strs", "l.var_types")).alias("z"))
-        .filter(F.col("z.var_types") == VT_DICT)
-        .select(F.col("z.var_strs").alias("value"))
-    )
-    var_rows = (
-        var_whole.union(var_clp).distinct().limit(driver_dict_cap + 1).collect()
-    )
-    if len(lt_rows) > driver_dict_cap or len(var_rows) > driver_dict_cap:
-        return _finish(
-            _encode_json_distributed(parsed, passthrough, driver_dict_cap)
-        )
-    lt_map = {v: i for i, v in enumerate(sorted(r["logtype"] for r in lt_rows))}
-    v_map = {v: i for i, v in enumerate(sorted(r["value"] for r in var_rows))}
-    logtype_dict = spark.createDataFrame(
-        [(v, k) for k, v in lt_map.items()], "logtype_id long, logtype string"
-    )
-    var_dict = spark.createDataFrame(
-        [(v, k) for k, v in v_map.items()], "var_id long, value string"
+    # ---- pass 1: every dictionary candidate in one job
+    cands = _dictionary_candidates(src, json_col, structurize_arrays, driver_dict_cap)
+    if cands is None:
+        parsed = _parse_records(src, json_col, passthrough, structurize_arrays)
+        return _finish(_encode_json_distributed(parsed, passthrough, driver_dict_cap))
+    nodes, logtypes, values, schemas = cands
+
+    # ---- driver: value-sorted rank IDs (the distributed path's IDs)
+    node_map = {k: i for i, k in enumerate(sorted(nodes))}
+    lt_map = {v: i for i, v in enumerate(sorted(logtypes))}
+    v_map = {v: i for i, v in enumerate(sorted(values))}
+    # schema ids rank the ","-joined sorted node ids AS STRINGS — the
+    # same key the distributed path ranks
+    keys = []
+    for sch in schemas:
+        ids = sorted(node_map[(p, t)] for p, t in json.loads(sch))
+        keys.append((",".join(map(str, ids)), tuple(ids)))
+    keys.sort()
+    schema_ids = {ids: i for i, (_sk, ids) in enumerate(keys)}
+
+    tables = _dictionary_tables(node_map, schema_ids, lt_map, v_map)
+    tree, schema_map, logtype_dict, var_dict = (
+        spark.createDataFrame(tables[name])
+        for name in ("schema_tree", "schema_map", "log_dict", "var_dict")
     )
 
-    # ---- schema map: distinct present-node sets → stable schema ids
-    b_nodes = spark.sparkContext.broadcast(node_map)
-
-    def keysets(batches):
-        nm = b_nodes.value
-        for pdf in batches:
-            out = []
-            for leaves in pdf["leaves"]:
-                ids = sorted({nm[(lf["key"], lf["tag"])] for lf in leaves})
-                out.append(",".join(map(str, ids)))
-            yield pd.DataFrame({"sk": out})
-
-    sk_rows = (
-        parsed.mapInPandas(keysets, schema="sk string")
-        .distinct()
-        .limit(driver_dict_cap + 1)
-        .collect()
-    )
-    if len(sk_rows) > driver_dict_cap:
-        return _finish(
-            _encode_json_distributed(parsed, passthrough, driver_dict_cap)
-        )
-    schema_ids = {
-        tuple(int(x) for x in sk.split(",") if x): i
-        for i, sk in enumerate(sorted(r["sk"] for r in sk_rows))
-    }
-    schema_map = spark.createDataFrame(
-        [(v, list(k)) for k, v in schema_ids.items()],
-        "schema_id long, node_ids array<long>",
-    )
-
-    # ---- encode pass: leaves → jvals, schema_id
-    b_lt = spark.sparkContext.broadcast(lt_map)
-    b_v = spark.sparkContext.broadcast(v_map)
-    b_sch = spark.sparkContext.broadcast(schema_ids)
-
+    # ---- pass 2: JSON text → schema_id, node_ids, jvals
+    b_maps = spark.sparkContext.broadcast((node_map, lt_map, v_map, schema_ids))
     out_schema = ", ".join(
-        [
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in parsed.schema
-            if f.name != "leaves"
-        ]
-        + [f"schema_id long", "node_ids array<long>", f"jvals {JVALS_TYPE}"]
+        _ddl(df, passthrough)
+        + ["schema_id long", "node_ids array<long>", f"jvals {JVALS_TYPE}"]
     )
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nm = b_nodes.value
-        ltm = b_lt.value
-        vm = b_v.value
-        sm = b_sch.value
+        nm, ltm, vm, sm = b_maps.value
         for pdf in batches:
             nid_col, jv_col, sid_col = [], [], []
-            for leaves in pdf["leaves"]:
+            for s in pdf[json_col]:
                 jv = []
                 present = set()
-                for lf in leaves:
-                    node = nm[(lf["key"], lf["tag"])]
+                for path, tag, ival, sval, clp in _record_leaves(
+                    s, structurize_arrays
+                ):
+                    node = nm[(path, tag)]
                     present.add(node)
-                    tag = lf["tag"]
-                    if tag == NODE_CLPSTR:
-                        enc_vars = []
-                        for j, t in enumerate(lf["var_types"]):
-                            if t == VT_DICT:
-                                enc_vars.append(vm[lf["var_strs"][j]])
-                            else:
-                                enc_vars.append(int(lf["enc_prelim"][j]))
-                        jv.append((node, ltm[lf["logtype"]], enc_vars))
-                    elif tag in (NODE_VARSTR, NODE_ARRAY, NODE_BIGNUM):
-                        jv.append((node, vm[lf["sval"]], None))
+                    if clp is not None:
+                        lt, vstrs, vtypes, prelim = clp
+                        enc_vars = [
+                            vm[v] if t == VT_DICT else e
+                            for v, t, e in zip(vstrs, vtypes, prelim)
+                        ]
+                        jv.append((node, ltm[lt], enc_vars))
                     elif tag == NODE_FMTFLOAT:
                         # numeric order key in enc, source text via vars[0]
-                        jv.append((node, int(lf["ival"]), [vm[lf["sval"]]]))
+                        jv.append((node, ival, [vm[sval]]))
+                    elif sval is not None:  # VarString / Array / BigNum
+                        jv.append((node, vm[sval], None))
                     else:
-                        jv.append((node, int(lf["ival"]), None))
+                        jv.append((node, ival, None))
                 ids = tuple(sorted(present))
                 nid_col.append(list(ids))
                 jv_col.append(jv)
                 sid_col.append(sm[ids])
-            out = pdf.drop(columns=["leaves"])
+            out = pdf[passthrough].copy()
             out["schema_id"] = sid_col
             out["node_ids"] = nid_col
             out["jvals"] = jv_col
             yield out
 
-    encoded = parsed.mapInPandas(encode, schema=out_schema)
+    encoded = src.mapInPandas(encode, schema=out_schema)
     return _finish(
         JsonArchive(
-            encoded, tree, schema_map, logtype_dict, var_dict, node_map, schema_ids
+            encoded, tree, schema_map, logtype_dict, var_dict, node_map, schema_ids,
+            dict_tables=tables,
         )
     )
+
+
+# candidate kinds of the dictionary pass
+_K_NODE, _K_LOGTYPE, _K_VAR, _K_SCHEMA = range(4)
+
+
+def _dictionary_candidates(
+    src: DataFrame, json_col: str, structurize: bool, cap: int
+) -> tuple | None:
+    """One job: every distinct merged-parse-tree node, ClpString
+    logtype, dictionary value and schema (present-node set, keyed by
+    (path, tag) because node ids do not exist yet) — deduped per
+    partition, then globally. Returns (nodes, logtypes, values,
+    schemas), or None when any kind exceeds `cap`: the collect stops at
+    4·(cap + 1) rows, and a truncated collect always has some kind with
+    more than `cap` rows (pigeonhole), so None is never a false
+    positive and a full collect is never truncated."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        logtypes: set = set()
+        values: set = set()
+        schemas: set = set()
+        for pdf in batches:
+            for s in pdf[json_col]:
+                present = set()
+                for path, tag, _ival, sval, clp in _record_leaves(s, structurize):
+                    present.add((path, tag))
+                    if clp is not None:
+                        lt, vstrs, vtypes, _prelim = clp
+                        logtypes.add(lt)
+                        values.update(
+                            v for v, t in zip(vstrs, vtypes) if t == VT_DICT
+                        )
+                    elif sval is not None:  # VarString/Array/BigNum/FmtFloat
+                        values.add(sval)
+                schemas.add(frozenset(present))
+        nodes = set().union(*schemas)
+        kinds, vals = [], []
+        for kind, items in (
+            (_K_NODE, (json.dumps(n) for n in nodes)),
+            (_K_LOGTYPE, logtypes),
+            (_K_VAR, values),
+            (_K_SCHEMA, (json.dumps(sorted(x)) for x in schemas)),
+        ):
+            for v in items:
+                kinds.append(kind)
+                vals.append(v)
+        yield pd.DataFrame({"kind": pd.Series(kinds, dtype="int32"), "value": vals})
+
+    rows = (
+        src.mapInPandas(run, schema="kind int, value string")
+        .distinct()
+        .limit(4 * (cap + 1))
+        .collect()
+    )
+    out: tuple = ([], [], [], [])
+    for r in rows:
+        out[r["kind"]].append(r["value"])
+    if any(len(x) > cap for x in out):
+        return None
+    nodes = [tuple(json.loads(n)) for n in out[_K_NODE]]
+    return nodes, out[_K_LOGTYPE], out[_K_VAR], out[_K_SCHEMA]
 
 
 def _encode_json_distributed(

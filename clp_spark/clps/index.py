@@ -317,21 +317,21 @@ def archive_may_match(index, req: frozenset) -> bool:
     return True
 
 
-def _archive_token(archive_dir: str) -> int:
-    """Freshness token for a saved archive: max mtime_ns across its
-    top-level entries (every JsonArchive.save rewrites them). Keys the
-    load cache so a re-saved archive is reloaded, never served stale."""
-    tok = 0
-    try:
-        with os.scandir(archive_dir) as it:
-            for e in it:
-                try:
-                    tok = max(tok, e.stat().st_mtime_ns)
-                except OSError:
-                    continue
-    except OSError:
-        pass
-    return tok
+def _archive_token(archive_dir: str) -> tuple:
+    """Freshness token for a saved archive: (relative path, size,
+    mtime_ns) of every entry under it. Keys the load cache so a re-saved
+    archive is reloaded, never served stale — file names and sizes catch
+    two saves within one mtime tick."""
+    tok = []
+    for root, dirs, files in os.walk(archive_dir):
+        for name in dirs + files:
+            p = os.path.join(root, name)
+            try:
+                st = os.stat(p)
+            except OSError:
+                continue
+            tok.append((os.path.relpath(p, archive_dir), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(tok))
 
 
 def load_surviving_archives(
@@ -350,9 +350,9 @@ def load_surviving_archives(
     prune rule and load overlap live in exactly one place.
 
     `cache`: optional {dir: (token, JsonArchive)} memo for long-lived
-    callers (the tool server) — entries are keyed on an mtime freshness
-    token, so immutable on-disk archives load once per server lifetime
-    while a re-saved archive reloads.
+    callers (the tool server) — entries are keyed on a file-level
+    freshness token, so immutable on-disk archives load once per server
+    lifetime while a re-saved archive reloads.
 
     Returns (searched_dirs, archives), parallel lists."""
     from concurrent.futures import ThreadPoolExecutor
@@ -372,7 +372,10 @@ def load_surviving_archives(
         if hit is not None and hit[0] == tok:
             return hit[1]
         arch = JsonArchive.load(spark, d, driver_dict_cap=driver_dict_cap)
-        cache[d] = (tok, arch)
+        if _archive_token(d) == tok:
+            cache[d] = (tok, arch)
+        else:  # re-saved while loading: never cache a possibly mixed load
+            cache.pop(d, None)
         return arch
 
     with ThreadPoolExecutor(max_workers=min(8, len(searched))) as pool:

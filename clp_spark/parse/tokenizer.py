@@ -171,161 +171,6 @@ def parse_one(msg: str):
     return "".join(lt), vs, vt, ev
 
 
-def _parse_batch_vec(texts: pd.Series) -> pd.DataFrame:
-    """Whole-batch vectorized twin of _parse_batch: ZERO per-token Python.
-
-    One pandas str.split per message runs the same classifying C-regex
-    as parse_one (pandas mirrors re.split, so the five alternation
-    groups arrive as aligned stride-6 slots); everything after — token
-    classification, int64-range and 16-digit demotions, float
-    bit-packing, placeholder substitution, logtype reassembly — is
-    numpy column algebra over the flattened slot arrays. The only
-    remaining per-row Python is one C-level ''.join for the logtype.
-    Messages containing placeholder/escape bytes (vanishingly rare)
-    are recomputed with parse_one for the exact translate semantics.
-    Fuzz-asserted byte-identical to the oracle (test_tokenizer_fuzz).
-    """
-    import numpy as np
-
-    n_rows = len(texts)
-    empty = pd.DataFrame(
-        {
-            "logtype": pd.Series([], dtype=object),
-            "var_strs": pd.Series([], dtype=object),
-            "var_types": pd.Series([], dtype=object),
-            "enc_prelim": pd.Series([], dtype=object),
-            "n_vars": pd.Series([], dtype="int32"),
-            "raw_bytes": pd.Series([], dtype="int64"),
-        }
-    )
-    if n_rows == 0:
-        return empty
-    msgs = texts.fillna("").astype(str).reset_index(drop=True)
-    nb = msgs.str.encode("utf-8").str.len().to_numpy(dtype=np.int64)
-
-    splits = msgs.str.split(_VAR_RE, regex=True)
-    lens = splits.str.len().to_numpy(dtype=np.int64)
-    flat = np.concatenate(splits.to_numpy())
-    starts = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-    idx_in_row = np.arange(starts[-1], dtype=np.int64) - np.repeat(
-        starts[:-1], lens
-    )
-    mod = idx_in_row % 6
-
-    s1 = flat[mod == 1]  # group i (int syntax)
-    s2 = flat[mod == 2]  # group f (float syntax)
-    i_cand = pd.notna(s1)
-    f_cand = pd.notna(s2)
-    tok = s1.copy()
-    tok[f_cand] = s2[f_cand]
-    rest = ~(i_cand | f_cand)
-    for k in (3, 4, 5):  # d / e / h → dictionary var
-        sk = flat[mod == k]
-        m = rest & pd.notna(sk)
-        tok[m] = sk[m]
-        rest &= ~m
-
-    total_toks = len(tok)
-    vt = np.full(total_toks, VT_DICT, dtype=np.int32)
-    ev = np.zeros(total_toks, dtype=np.int64)
-    ph = np.full(total_toks, PLACEHOLDER_DICT, dtype=object)
-
-    # ---- int vars: parse + int64-range demotion ----
-    if i_cand.any():
-        ti = pd.Series(tok[i_cand], dtype=object)
-        ndig = ti.str.len().to_numpy(np.int64) - ti.str.startswith(
-            "-"
-        ).to_numpy(bool)
-        safe = ndig <= 18  # ≤18 digits always fits int64
-        vals = np.zeros(len(ti), dtype=np.int64)
-        ok = np.ones(len(ti), dtype=bool)
-        if safe.any():
-            vals[safe] = pd.to_numeric(ti[safe]).to_numpy(np.int64)
-        for j in np.flatnonzero(~safe):  # 19/20-digit: exact check
-            v = int(ti.iloc[j])
-            if _INT64_MIN <= v <= _INT64_MAX:
-                vals[j] = v
-            else:
-                ok[j] = False  # out-of-range integer text → dict var
-        i_pos = np.flatnonzero(i_cand)[ok]
-        vt[i_pos] = VT_INT
-        ev[i_pos] = vals[ok]
-        ph[i_pos] = PLACEHOLDER_INT
-
-    # ---- float vars: 54-bit packing + >16-digit demotion ----
-    if f_cand.any():
-        tf = pd.Series(tok[f_cand], dtype=object)
-        neg = tf.str.startswith("-").to_numpy(bool)
-        body = tf.str.lstrip("-")  # float syntax has one optional lead -
-        digits = body.str.replace(".", "", regex=False)
-        ndig = digits.str.len().to_numpy(np.int64)
-        ok = ndig <= 16
-        dot = body.str.find(".").to_numpy(np.int64)
-        dec_pos = body.str.len().to_numpy(np.int64) - 1 - dot
-        dg = np.zeros(len(tf), dtype=np.uint64)
-        if ok.any():
-            dg[ok] = (
-                pd.to_numeric(digits[ok]).to_numpy(np.int64).astype(np.uint64)
-            )
-        e = np.where(neg, np.uint64(1 << 55), np.uint64(0))
-        e = e | (dg & np.uint64((1 << 54) - 1))
-        e = (e << np.uint64(4)) | (
-            (ndig - 1).astype(np.uint64) & np.uint64(0x0F)
-        )
-        e = (e << np.uint64(4)) | (
-            (dec_pos - 1).astype(np.uint64) & np.uint64(0x0F)
-        )
-        f_pos = np.flatnonzero(f_cand)[ok]
-        vt[f_pos] = VT_FLOAT
-        ev[f_pos] = e.view(np.int64)[ok]  # view wraps like the 2^64 fold
-        ph[f_pos] = PLACEHOLDER_FLOAT
-
-    # ---- logtype: statics interleaved with placeholders, one join/row ----
-    statics = flat[mod == 0]
-    n_toks = (lens - 1) // 6
-    out_lens = 2 * n_toks + 1
-    out_starts = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(out_lens, out=out_starts[1:])
-    out_flat = np.empty(out_starts[-1], dtype=object)
-    out_idx = np.arange(out_starts[-1], dtype=np.int64) - np.repeat(
-        out_starts[:-1], out_lens
-    )
-    even = (out_idx & 1) == 0
-    out_flat[even] = statics
-    out_flat[~even] = ph
-    logtypes = [
-        "".join(a) for a in np.split(out_flat, out_starts[1:-1])
-    ]
-
-    tok_bounds = np.cumsum(n_toks)[:-1]
-    var_strs = [list(a) for a in np.split(tok, tok_bounds)]
-    var_types = [a.tolist() for a in np.split(vt, tok_bounds)]
-    enc = [a.tolist() for a in np.split(ev, tok_bounds)]
-
-    out = pd.DataFrame(
-        {
-            "logtype": logtypes,
-            "var_strs": var_strs,
-            "var_types": var_types,
-            "enc_prelim": enc,
-            "n_vars": n_toks.astype(np.int32),
-            "raw_bytes": nb,
-        }
-    )
-
-    # escape-needing rows: exact scalar semantics (rare — gated on one
-    # C-level scan of the whole batch)
-    esc = msgs.str.contains("[\\\\\x11\x12\x13]", regex=True).to_numpy(bool)
-    for pos in np.flatnonzero(esc):
-        l, s, t, e2 = parse_one(msgs.iloc[pos])
-        out.iat[pos, 0] = l
-        out.iat[pos, 1] = s
-        out.iat[pos, 2] = t
-        out.iat[pos, 3] = e2
-    return out
-
-
 def _parse_batch(texts: pd.Series) -> pd.DataFrame:
     logtypes = []
     var_strs = []

@@ -433,6 +433,16 @@ def compress(
         )
     lt_dict = spark.read.parquet(os.path.join(dicts_dir, "logtype"))
     v_dict = spark.read.parquet(os.path.join(dicts_dir, "var"))
+    # the committed dictionary size (this run's or a resumed run's) —
+    # sizes the route's logtype_id bloom filter
+    lt_count = next(
+        (
+            r.get("logtype_cardinality")
+            for r in reversed(manifest.records())
+            if r["phase"] == "dicts" and r.get("committed")
+        ),
+        None,
+    )
 
     # ---- phase 3: encode + route (salted fan-out, atomic overwrite) ----
     encoded_schema = None
@@ -484,7 +494,8 @@ def compress(
             # the whole encoded frame cached.
             with step_timer("route.write"):
                 route_to_sinks(
-                    enc_sinked, sinks_dir, cfg, presinked=True, bounds=bounds
+                    enc_sinked, sinks_dir, cfg, presinked=True, bounds=bounds,
+                    logtype_count=lt_count,
                 )
             book_src = spark.read.schema(encoded_schema).parquet(sinks_dir)
             f_route_done = True
@@ -530,7 +541,10 @@ def compress(
 
         def _w_route():
             with step_timer("route.write"):
-                route_to_sinks(enc_sinked, sinks_dir, cfg, presinked=True)
+                route_to_sinks(
+                    enc_sinked, sinks_dir, cfg, presinked=True,
+                    logtype_count=lt_count,
+                )
 
         var_man = (
             book_src.select(

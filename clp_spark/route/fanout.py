@@ -194,6 +194,7 @@ def _route_with_bounds(
     tiebreak,
     bounds_pdf,
     total: int,
+    logtype_count: int | None,
 ) -> None:
     """Analytic range route: partition boundaries computed from EXACT
     per-(sink, seg, logtype) row counts that ride along with the
@@ -238,16 +239,46 @@ def _route_with_bounds(
     magic_col = F.element_at(
         F.array(*[F.lit(mk) for mk in magic]).cast("array<long>"), pid + F.lit(1)
     )
-    writer = (
+    _write_sinks(
         joined.withColumn("_magic", magic_col)
         .repartition(p_n, F.col("_magic"))
         .sortWithinPartitions(*sort_cols)
-        .drop("_magic", "_cum_before", "_cell_rows")
-        .write.mode("overwrite")
+        .drop("_magic", "_cum_before", "_cell_rows"),
+        out_path,
+        cfg,
+        part_cols,
+        logtype_count,
+    )
+
+
+def _write_sinks(
+    df: DataFrame,
+    out_path: str,
+    cfg: PipelineConfig,
+    part_cols: list,
+    logtype_count: int | None,
+) -> None:
+    """The sink parquet write shared by both routes.
+
+    parquet bloom filter on logtype_id: the row-group analog of the
+    reference's var-dict bloom (BloomFilter.hpp:18-29, SURVEY §2.3) —
+    logtype isin prefilters skip row groups without the IDs. parquet-mr
+    writes the bloom only for a chunk that is not fully
+    dictionary-encoded (here: files of very few rows), and without an
+    expected ndv it sizes that filter at its 1 MiB maximum. The
+    dictionary's logtype count bounds the distinct IDs of any chunk, so
+    it sizes the filter for the default false-positive rate instead."""
+    writer = (
+        df.write.mode("overwrite")
         .partitionBy(*part_cols)
         .option("compression", cfg.compression_codec)
         .option("parquet.bloom.filter.enabled#logtype_id", "true")
     )
+    if logtype_count is not None:
+        writer = writer.option(
+            "parquet.bloom.filter.expected.ndv#logtype_id",
+            str(max(1, logtype_count)),
+        )
     if cfg.parquet_block_size is not None:
         writer = writer.option("parquet.block.size", str(cfg.parquet_block_size))
     writer.parquet(out_path)
@@ -260,6 +291,7 @@ def route_to_sinks(
     hot_logtypes: list[int] | None = None,
     presinked: bool = False,
     bounds: tuple | None = None,
+    logtype_count: int | None = None,
 ) -> None:
     """Write encoded rows into per-sink parquet partitions, skew-salted.
 
@@ -271,6 +303,9 @@ def route_to_sinks(
     route (_route_with_bounds, no sampler job, no persist needed). When
     None (no timestamp column, resume without counts, above-cap dicts)
     the sampler-based range shuffle below stands.
+
+    logtype_count: the logtype dictionary's size; sizes the logtype_id
+    bloom filter (see _write_sinks). None keeps parquet-mr's default.
 
     hot_logtypes is accepted for API compatibility but unused: the range
     partitioner below handles hot-template skew natively (rows equal on
@@ -310,25 +345,19 @@ def route_to_sinks(
     if bounds is not None and bounds[1] > 0:
         bounds_pdf, total = bounds
         _route_with_bounds(
-            df, out_path, cfg, part_cols, sort_cols, tiebreak, bounds_pdf, total
+            df, out_path, cfg, part_cols, sort_cols, tiebreak, bounds_pdf, total,
+            logtype_count,
         )
         return
-    writer = (
+    _write_sinks(
         df.repartitionByRange(
             cfg.shuffle_partitions, *[F.col(c) for c in sort_cols], tiebreak
-        )
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .option("compression", cfg.compression_codec)
-        # parquet bloom filter on logtype_id: the row-group analog of the
-        # reference's var-dict bloom (BloomFilter.hpp:18-29, SURVEY §2.3)
-        # — logtype isin prefilters skip row groups without the IDs
-        .option("parquet.bloom.filter.enabled#logtype_id", "true")
+        ).sortWithinPartitions(*sort_cols),
+        out_path,
+        cfg,
+        part_cols,
+        logtype_count,
     )
-    if cfg.parquet_block_size is not None:
-        writer = writer.option("parquet.block.size", str(cfg.parquet_block_size))
-    writer.parquet(out_path)
 
 
 def sink_manifests(

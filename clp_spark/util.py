@@ -103,7 +103,9 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(min_partitions)
 
 
-def write_driver_table(tbl, dirpath: str, compression: str = "zstd") -> None:
+def write_driver_table(
+    tbl, dirpath: str, compression: str = "zstd", use_dictionary: bool = True
+) -> None:
     """Single-file parquet dataset written driver-side with pyarrow —
     the shared bottom half of every driver-side bookkeeping write
     (dictionaries, manifests, metrics). The data is already on the
@@ -122,4 +124,6 @@ def write_driver_table(tbl, dirpath: str, compression: str = "zstd") -> None:
         pass
     fs.create_dir(resolved, recursive=True)
     with fs.open_output_stream(f"{resolved}/part-00000.zstd.parquet") as out:
-        pq.write_table(tbl, out, compression=compression)
+        pq.write_table(
+            tbl, out, compression=compression, use_dictionary=use_dictionary
+        )

@@ -141,6 +141,39 @@ def test_archive_save_load_roundtrip(spark, archive, tmp_path):
         assert out2[rec["id"]] == rec
 
 
+def test_fast_path_encode_and_save_cost(spark, tmp_path):
+    """encode_json_df(...).save() on the driver-map fast path runs at
+    most 3 Spark jobs: the dictionary-candidate pass (a shuffle-map job
+    plus its collect) and the encoded-table write. The dictionaries are
+    written from the driver, without parquet dictionary pages (their
+    values are unique)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    df = spark.createDataFrame(
+        [(r["id"], json.dumps(r)) for r in RECORDS], "rid long, json string"
+    )
+    out = str(tmp_path / "jarch")
+    sc = spark.sparkContext
+    sc.setJobGroup("clps-encode-save", "fast-path encode + save")
+    try:
+        encode_json_df(df, "json", passthrough=["rid"]).save(out)
+    finally:
+        sc.setJobGroup("clps-encode-save-done", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("clps-encode-save")
+    assert 1 <= len(jobs) <= 3, jobs
+
+    (f,) = glob.glob(f"{out}/var_dict/*.parquet")
+    meta = pq.ParquetFile(f).metadata
+    assert meta.num_rows > 0
+    for rg in range(meta.num_row_groups):
+        for c in range(meta.num_columns):
+            col = meta.row_group(rg).column(c)
+            assert not col.has_dictionary_page, col.path_in_schema
+            assert not any("DICTIONARY" in e for e in col.encodings), col.encodings
+
+
 def test_type_split_creates_two_nodes_for_one_path(archive):
     # 'level' is VarString everywhere; 'msg' ClpString; a path appearing
     # with two types gets two nodes — here check distinct tags exist

@@ -221,3 +221,34 @@ def test_batched_index_read_matches_per_archive(spark, tmp_path_factory):
     serial = {d: read_column_index(d) for d in dirs}
     assert batched == serial
     assert all(len(v) == 2 for v in batched.values())
+
+
+def test_resave_within_old_mtimes_reloads(spark, tmp_path):
+    """The archive load cache keys on every file's name and size, not
+    only on mtimes: a re-save whose files carry the old mtimes (two
+    saves within one mtime tick) still reloads."""
+    import os
+
+    from clp_spark.clps.index import load_surviving_archives
+
+    d = str(tmp_path / "arch")
+    pinned = 1_600_000_000 * 10**9
+
+    def save_pinned(docs):
+        df = spark.createDataFrame(
+            [(i, json.dumps(x)) for i, x in enumerate(docs)], "id long, j string"
+        )
+        encode_json_df(df, "j", passthrough=["id"]).save(d)
+        for root, dirs, files in os.walk(d):
+            for name in dirs + files:
+                os.utime(os.path.join(root, name), ns=(pinned, pinned))
+
+    cache: dict = {}
+    save_pinned(DOCS_A)
+    _, (first,) = load_surviving_archives(spark, [d], cache=cache)
+    _, (again,) = load_surviving_archives(spark, [d], cache=cache)
+    assert again is first  # unchanged archive: served from the cache
+    save_pinned(DOCS_B)
+    _, (second,) = load_surviving_archives(spark, [d], cache=cache)
+    assert second is not first
+    assert any(p == "items" for p, _t in second.node_map)

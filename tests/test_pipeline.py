@@ -288,3 +288,22 @@ def test_metrics_fallback_schema_matches_driver_path(spark, pages_pdf, tmp_path_
         for r in fb.collect()
     }
     assert fb_rows == driver_rows
+
+
+def test_single_row_sink_file_is_small(spark, pages_pdf, tmp_path_factory):
+    """A sink file holding one row stays a few KiB. Its logtype_id
+    chunk is plain-encoded, so parquet-mr writes the chunk's bloom
+    filter; sized without an expected ndv that filter alone is 1 MiB."""
+    import pyarrow.parquet as pq
+
+    df = spark.createDataFrame(pages_pdf.head(3))
+    out = str(tmp_path_factory.mktemp("one_row_sinks"))
+    res = compress(spark, df, out, CFG)
+    sizes = []
+    for root, _dirs, files in os.walk(res["sinks"]):
+        for f in files:
+            p = os.path.join(root, f)
+            if f.endswith(".parquet") and pq.ParquetFile(p).metadata.num_rows == 1:
+                sizes.append(os.path.getsize(p))
+    assert sizes, "fixture produced no single-row sink file"
+    assert max(sizes) < 64 * 1024, sizes

@@ -481,6 +481,20 @@ def test_embedding_near_dup_empty_input_is_noop(spark):
     assert out.columns == ["doc_a", "doc_b"]
 
 
+def test_embedding_near_dup_null_first_embedding(spark):
+    """A null leading embedding must not turn the dedup into a no-op:
+    the LSH dimension comes from the first non-null row."""
+    from clp_spark.textops.dedup import embedding_near_dup_pairs
+
+    emb = spark.createDataFrame(
+        [(0, None), (1, [1.0, 0.0, 0.5]), (2, [1.0, 0.0, 0.5]), (3, [0.0, 1.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1)
+    assert emb.first()["embedding"] is None
+    got = {(r["doc_a"], r["doc_b"]) for r in embedding_near_dup_pairs(emb).collect()}
+    assert got == {(1, 2)}
+
+
 def test_minhash_rejects_uneven_bands(spark):
     """bands must divide num_hashes: remainder hashes would silently
     change recall, and bands > num_hashes degenerates every band to one
