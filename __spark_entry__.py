@@ -808,8 +808,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         df, searched = sql_over_archives(
             spark,
             dirs,
-            "SELECT type, count(*) AS n, sum(uid) AS sum_uid, "
-            "sum(amount) AS sum_amount FROM clp GROUP BY type",
+            "SELECT type, count(*) AS n, "
+            "CAST(sum(uid) AS BIGINT) AS sum_uid, "
+            "CAST(sum(amount) AS BIGINT) AS sum_amount FROM clp GROUP BY type",
         )
         assert searched == dirs, searched
         return df
@@ -1530,9 +1531,10 @@ def oracle_sql() -> dict[str, str]:
         """,
         "clp_sql_over_archives": """
             SELECT event_type AS type, count(*) AS n,
-                   sum(CASE WHEN user_id % 2 = 0 THEN user_id END) AS sum_uid,
-                   sum(CASE WHEN user_id % 2 = 1 THEN user_id * 2 END)
-                       AS sum_amount
+                   CAST(sum(CASE WHEN user_id % 2 = 0 THEN user_id END)
+                        AS BIGINT) AS sum_uid,
+                   CAST(sum(CASE WHEN user_id % 2 = 1 THEN user_id * 2 END)
+                        AS BIGINT) AS sum_amount
             FROM events GROUP BY event_type
         """,
         "clp_ts_ingest_roundtrip": """

@@ -2,7 +2,7 @@
 
 Mirrors the knobs of the reference's compression/search jobs
 (/root/reference/components/job-orchestration/job_orchestration/scheduler/job_config.py)
-but expressed for a Spark job: sink fan-out width, skew salting, checkpoint
+but expressed for a Spark job: sink fan-out width, segmenting, checkpoint
 location, shuffle sizing.
 """
 
@@ -41,11 +41,6 @@ class PipelineConfig:
     # seg_id).
     num_segments: int = 4
     segment_window_days: float = 7.0
-
-    # skew: logtypes whose row share exceeds this fraction get salted
-    hot_logtype_threshold: float = 0.05
-    # salt fan-out for hot logtypes (pre-shuffle sub-splitting)
-    num_salt_buckets: int = 16
 
     # resume granularity: input rows are split into this many url-hash
     # buckets; each bucket commits atomically and is skipped on resume

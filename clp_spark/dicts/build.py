@@ -429,54 +429,6 @@ def encode_with_maps(
     return src.mapInArrow(run, schema=out_schema)
 
 
-def encode_with_maps_pandas(
-    parsed: DataFrame, logtype_map: dict, var_map: dict
-) -> DataFrame:
-    """Row-at-a-time reference engine for encode_with_maps — kept for
-    the parity/fuzz tests that pin the vectorized kernel's semantics."""
-    spark = parsed.sparkSession
-    b_lt = spark.sparkContext.broadcast(logtype_map)
-    b_v = spark.sparkContext.broadcast(var_map)
-
-    drop = ("logtype", "var_strs", "var_types", "enc_prelim")
-    keep = [c for c in parsed.columns if c not in drop]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in parsed.schema
-        if f.name in keep
-    )
-    out_schema += (
-        ", logtype_id long, encoded_vars array<long>, dict_var_ids array<long>"
-    )
-
-    def patch(batches):
-        lt_m = b_lt.value
-        v_m = b_v.value
-        for pdf in batches:
-            lt_ids = [lt_m[lt] for lt in pdf["logtype"]]
-            enc_out = []
-            dict_ids_out = []
-            for strs, types, enc in zip(
-                pdf["var_strs"], pdf["var_types"], pdf["enc_prelim"]
-            ):
-                enc = list(enc)
-                dict_ids = []
-                for j, t in enumerate(types):
-                    if t == VT_DICT:
-                        vid = v_m[strs[j]]
-                        enc[j] = vid
-                        dict_ids.append(vid)
-                enc_out.append(enc)
-                dict_ids_out.append(dict_ids)
-            out = pdf[keep].copy()
-            out["logtype_id"] = lt_ids
-            out["encoded_vars"] = enc_out
-            out["dict_var_ids"] = dict_ids_out
-            yield out
-
-    return parsed.mapInPandas(patch, schema=out_schema)
-
-
 def encode_with_dicts(
     parsed: DataFrame,
     logtype_dict: DataFrame,

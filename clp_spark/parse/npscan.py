@@ -1,15 +1,16 @@
 """Byte-level vectorized CLP tokenizer: one numpy scan, zero per-token
 Python.
 
-Third tokenizer engine (after the scalar-regex and JVM-expression
-ones), built for the compress hot path: the whole Arrow batch is
-processed as ONE uint8 array with lookup-table char classes, run
-extraction by boolean diff, per-run classification via cumulative-sum /
-segmented-reduction class counts, int/float encoding via segmented
-polynomial reductions, and logtype assembly via masked byte deletion —
-every step a C-level numpy primitive. Output variable arrays are built
-as Arrow buffers (offsets + concatenated token bytes), so there is no
-per-row or per-token Python anywhere in the path.
+The compress tokenizer's kernel (`tokenize_df` runs it over
+mapInArrow; `parse_one` is the scalar form of the same rules). The
+whole Arrow batch is processed as ONE uint8 array with lookup-table
+char classes, run extraction by boolean diff, per-run classification
+via cumulative-sum / segmented-reduction class counts, int/float
+encoding via segmented polynomial reductions, and logtype assembly via
+masked byte deletion — every step a C-level numpy primitive. Output
+variable arrays are built as Arrow buffers (offsets + concatenated
+token bytes), so there is no per-row or per-token Python anywhere in
+the path.
 
 Semantics are EXACTLY those of parse_one / the oracle tokenizer
 (fuzz-asserted in tests/test_tokenizer_fuzz.py), which re-express the
@@ -35,7 +36,7 @@ cumsum, two boolean gathers, and subset-sized segmented reductions —
 all linear in BYTES with small constants, independent of message or
 token count. Batches containing bytes 0x00-0x03 (the internal row
 separator and placeholder sentinels — never present in real text)
-fall back to the scalar engine.
+fall back to `parse_one` per row.
 """
 
 from __future__ import annotations

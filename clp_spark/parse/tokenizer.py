@@ -1,4 +1,5 @@
-"""Distributed CLP-style tokenizer/encoder: Arrow-batched mapInPandas.
+"""Distributed CLP-style tokenizer/encoder: the npscan kernel over
+mapInArrow.
 
 Independent (vectorized) implementation of the semantics in
 clp_spark.oracle.tokenizer — the pytest suite asserts exact agreement
@@ -9,16 +10,12 @@ between the two. Rules from the reference:
   - logtype escaping:         clp/ir/parsing.inc
 
 Design notes (scale):
-  - TWO engines, byte-identical output (fuzz-asserted vs the oracle):
-    `python` (mapInPandas, Arrow-batched, one compiled C-regex pass that
-    only visits variable tokens) and `sql` (pure JVM expressions:
-    regexp_extract_all + split + transform).
-  - MEASURED (500k docs, local[8], warm): python 3.4s vs sql 4.8s.
-    The SQL path loses because Spark higher-order-function lambdas are
-    evaluated interpreted (no whole-stage codegen) and the classifier
-    regexes re-run per token per derived column, while the Python path
-    is one C-regex scan per message touching only variable tokens.
-    Default is therefore `python`; switch via CLP_SPARK_TOKENIZER=sql.
+  - ONE engine: `tokenize_df` runs the byte-level numpy scan
+    (clp_spark.parse.npscan) on whole Arrow batches — no pandas, no
+    per-row or per-token Python. `parse_one` is the scalar form of the
+    same rules (one compiled C-regex pass that only visits variable
+    tokens); it serves the clp_s encoder, search, and the kernel's
+    fallback for batches holding control bytes 0x00-0x03.
   - encoded int/float values are computed here; dictionary-variable IDs
     are enriched later (clp_spark.dicts) so this stage needs no global
     state and is embarrassingly parallel at any cluster size.
@@ -26,12 +23,7 @@ Design notes (scale):
 
 from __future__ import annotations
 
-import os
 import re
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import functions as F
 
 from clp_spark.config import (
     PLACEHOLDER_DICT,
@@ -171,139 +163,27 @@ def parse_one(msg: str):
     return "".join(lt), vs, vt, ev
 
 
-def _parse_batch(texts: pd.Series) -> pd.DataFrame:
-    logtypes = []
-    var_strs = []
-    var_types = []
-    enc = []
-    nv = []
-    nb = []
-    for msg in texts:
-        l, s, t, e = parse_one(msg if msg is not None else "")
-        logtypes.append(l)
-        var_strs.append(s)
-        var_types.append(t)
-        enc.append(e)
-        nv.append(len(s))
-        nb.append(len(msg.encode("utf-8")) if msg is not None else 0)
-    return pd.DataFrame(
-        {
-            "logtype": logtypes,
-            "var_strs": var_strs,
-            "var_types": var_types,
-            "enc_prelim": enc,
-            "n_vars": nv,
-            "raw_bytes": nb,
-        }
-    )
+def tokenize_df(
+    df,
+    text_col: str = "text",
+    passthrough: list[str] | None = None,
+):
+    """pages → parsed messages. Narrow map, no shuffle.
 
-
-# ---------------------------------------------------------------------------
-# JVM-expression engine: the same tokenizer semantics as parse_one, built
-# entirely from Spark SQL expressions so the parse stage is whole-stage
-# codegen (no Python workers, no Arrow transfer). Lookarounds pin matches
-# to maximal token-char runs exactly like _VAR_RE; int/float classification
-# is done per matched token with rlike + try_cast, mirroring the i/f
-# alternation order (an int64-range or 16-digit check failure demotes the
-# token to a dictionary var, identical to the Python branches above).
-_VAR_PATTERN_J = (
-    rf"(?<![{_TC}])"
-    rf"(?:[{_TC}]*[0-9][{_TC}]*"
-    rf"|(?<==)[{_TC}]*[A-Za-z][{_TC}]*"
-    rf"|[0-9a-fA-F]{{2,}})"
-    rf"(?![{_TC}])"
-)
-_INT_RE_J = r"^(0|-?[1-9][0-9]*)$"
-_FLOAT_RE_J = r"^-?[0-9]*\.[0-9]+$"
-
-
-def _esc_expr(col):
-    # same semantics as str.translate(_ESC_TRANS): escape backslash first,
-    # then placeholders (sequential == simultaneous here because the
-    # escape prefix is escaped before placeholders are touched and
-    # placeholder bytes are never produced by earlier replacements)
-    c = F.replace(col, F.lit(PLACEHOLDER_ESCAPE), F.lit(PLACEHOLDER_ESCAPE * 2))
-    for ph in (PLACEHOLDER_INT, PLACEHOLDER_DICT, PLACEHOLDER_FLOAT):
-        c = F.replace(c, F.lit(ph), F.lit(PLACEHOLDER_ESCAPE + ph))
-    return c
-
-
-def tokenize_exprs(text_col: str = "text") -> dict:
-    """Column expressions computing the PARSED_FIELDS from `text_col`."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    toks = F.regexp_extract_all(t, F.lit(_VAR_PATTERN_J), 0)
-    statics = F.split(t, _VAR_PATTERN_J, -1)
-
-    def is_int(x):
-        return x.rlike(_INT_RE_J) & x.try_cast("long").isNotNull()
-
-    def is_float(x):
-        return x.rlike(_FLOAT_RE_J) & (
-            F.length(F.replace(F.replace(x, F.lit(".")), F.lit("-"))) <= 16
-        )
-
-    def f_enc(x):
-        # 54-bit float packing (EncodedVariableInterpreter.cpp:113-140);
-        # Java long arithmetic wraps exactly like the Python 2^64 fold
-        neg = x.startswith("-")
-        body = F.when(neg, F.substr(x, F.lit(2))).otherwise(x)
-        dot = F.instr(body, ".")
-        digits = F.replace(body, F.lit("."))
-        num_digits = F.length(digits)
-        decimal_pos = F.length(body) - dot
-        enc = F.when(neg, F.lit(1 << 55).cast("long")).otherwise(F.lit(0).cast("long"))
-        enc = enc.bitwiseOR(digits.cast("long"))
-        enc = F.shiftleft(enc, 4).bitwiseOR(
-            (num_digits - 1).bitwiseAND(F.lit(15)).cast("long")
-        )
-        enc = F.shiftleft(enc, 4).bitwiseOR(
-            (decimal_pos - 1).bitwiseAND(F.lit(15)).cast("long")
-        )
-        return enc
-
-    vt = F.transform(
-        toks,
-        lambda x: F.when(is_int(x), F.lit(VT_INT))
-        .when(is_float(x), F.lit(VT_FLOAT))
-        .otherwise(F.lit(VT_DICT))
-        .cast("int"),
-    )
-    ev = F.transform(
-        toks,
-        lambda x: F.when(is_int(x), x.try_cast("long"))
-        .when(is_float(x), f_enc(x))
-        .otherwise(F.lit(0).cast("long")),
-    )
-    ph = F.transform(
-        toks,
-        lambda x: F.when(is_int(x), F.lit(PLACEHOLDER_INT))
-        .when(is_float(x), F.lit(PLACEHOLDER_FLOAT))
-        .otherwise(F.lit(PLACEHOLDER_DICT)),
-    )
-    esc_statics = F.transform(statics, _esc_expr)
-    n = F.size(toks)
-    # logtype = statics[0]+ph[0]+statics[1]+...+statics[n]
-    head = F.array_join(
-        F.zip_with(F.slice(esc_statics, 1, n), ph, lambda s, p: F.concat(s, p)), ""
-    )
-    return {
-        "logtype": F.concat(head, F.element_at(esc_statics, -1)),
-        "var_strs": toks,
-        "var_types": vt,
-        "enc_prelim": ev,
-        "n_vars": n.cast("int"),
-        "raw_bytes": F.octet_length(t).cast("long"),
-    }
-
-
-def _tokenize_df_arrow(df, text_col: str, passthrough: list[str]):
-    """numpy-engine tokenize: mapInArrow over the byte-level vectorized
-    scan (clp_spark.parse.npscan). The whole batch is one uint8 array;
+    Keeps `passthrough` columns (default: url, warc_ts, lang) and appends
+    the parsed fields. mapInArrow over the byte-level vectorized scan
+    (clp_spark.parse.npscan): the whole batch is one uint8 array and the
     output list columns are built straight from Arrow offset/value
-    buffers — no pandas, no per-row or per-token Python. Batches whose
-    text contains control bytes 0x00-0x03 fall back to the scalar
-    engine (never present in real corpora; fuzz covers them)."""
-    src = df.select(*passthrough, text_col)
+    buffers. Batches whose text contains control bytes 0x00-0x03 fall
+    back to `parse_one` per row (never present in real corpora; the
+    tests cover them). Output is byte-identical to the oracle
+    tokenizer (fuzz-asserted)."""
+    if passthrough is None:
+        passthrough = [c for c in ("url", "warc_ts", "lang") if c in df.columns]
+    # a passthrough text column rides along once and feeds the kernel
+    cols = passthrough if text_col in passthrough else [*passthrough, text_col]
+    text_idx = cols.index(text_col)
+    src = df.select(*cols)
     head = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in src.schema
@@ -318,19 +198,17 @@ def _tokenize_df_arrow(df, text_col: str, passthrough: list[str]):
     def run(batches):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         from clp_spark.parse.npscan import parse_block_buf
 
         def _str_buffers(col):
-            """(values uint8, offsets int64) views of an Arrow string
-            column — no Python strings, no copies. None when the column
-            isn't plain utf8 (then the caller takes the list path)."""
+            """(values uint8, offsets int64) views of an Arrow utf8
+            column — no Python strings, no copies."""
             if col.null_count:
-                import pyarrow.compute as pc
-
                 col = pc.fill_null(col, "")
             if not pa.types.is_string(col.type):
-                return None
+                col = col.cast(pa.string())
             offs = np.frombuffer(col.buffers()[1], dtype=np.int32)[
                 col.offset : col.offset + len(col) + 1
             ].astype(np.int64)
@@ -338,22 +216,8 @@ def _tokenize_df_arrow(df, text_col: str, passthrough: list[str]):
             return vals, offs
 
         for rb in batches:
-            col = rb.column(n_pass)
-            bufs = _str_buffers(col)
-            if bufs is not None:
-                r = parse_block_buf(*bufs)
-            else:
-                from clp_spark.parse.npscan import parse_block
-
-                msgs = [m if m is not None else "" for m in col.to_pylist()]
-                r = parse_block(msgs)
-                if r is not None:
-                    r["lt_offsets"] = np.cumsum(
-                        [0] + [len(s.encode()) for s in r["logtypes"]]
-                    )
-                    r["lt_values"] = np.frombuffer(
-                        "".join(r["logtypes"]).encode(), dtype=np.uint8
-                    )
+            col = rb.column(text_idx)
+            r = parse_block_buf(*_str_buffers(col))
             if r is None:
                 msgs = [m if m is not None else "" for m in col.to_pylist()]
                 rows = [parse_one(m) for m in msgs]
@@ -399,50 +263,3 @@ def _tokenize_df_arrow(df, text_col: str, passthrough: list[str]):
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     return src.mapInArrow(run, schema=out_schema)
-
-
-def tokenize_df(
-    df,
-    text_col: str = "text",
-    passthrough: list[str] | None = None,
-    engine: str | None = None,
-):
-    """pages → parsed messages. Narrow map, no shuffle.
-
-    Keeps `passthrough` columns (default: url, warc_ts, lang) and appends
-    the parsed fields. `engine`:
-      "numpy"  (default) — byte-level vectorized scan (npscan.py) over
-               mapInArrow; measured 2.6× the scalar engine single-core
-               and zero per-token Python;
-      "python" — scalar-regex mapInPandas (the previous default);
-      "sql"    — pure JVM expressions (whole-stage codegen, but HOF
-               lambdas are interpreted — measured slower, kept for A/B).
-    All engines produce byte-identical output (fuzz-asserted); override
-    via the CLP_SPARK_TOKENIZER env var.
-    """
-    if passthrough is None:
-        passthrough = [c for c in ("url", "warc_ts", "lang") if c in df.columns]
-    engine = engine or os.environ.get("CLP_SPARK_TOKENIZER", "numpy")
-    if engine == "sql":
-        exprs = tokenize_exprs(text_col)
-        return df.select(
-            *passthrough, *[c.alias(name) for name, c in exprs.items()]
-        )
-    if engine == "numpy":
-        return _tokenize_df_arrow(df, text_col, passthrough)
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name in passthrough
-    )
-    out_schema = out_schema + ", " + PARSED_FIELDS
-
-    cols = passthrough + [text_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = _parse_batch(pdf[text_col])
-            yield pd.concat(
-                [pdf[passthrough].reset_index(drop=True), parsed], axis=1
-            )
-
-    return df.select(*cols).mapInPandas(run, schema=out_schema)

@@ -1,11 +1,11 @@
 """End-to-end compress job: pages → parse → dicts → encode → route → metrics.
 
 Spark shape (SURVEY.md §3.1): one logical job —
-  read pages → mapInPandas(tokenize+encode)            [narrow, no shuffle]
+  read pages → mapInArrow(tokenize)                   [narrow, no shuffle]
   → build logtype/var dicts (2 distinct aggs + stable-ID rank)
   → enrich (broadcast dict join / broadcast-map patch)  [no shuffle]
-  → fan-out to per-sink parquet partitions (1 salted shuffle)
-  → per-sink aggregates → metrics table
+  → fan-out to per-sink parquet partitions (1 range shuffle)
+  → per-segment summary → manifests + per-sink metrics table
 
 Checkpointing: the parse phase commits per url-hash bucket; dict/encode/
 route phases commit as whole phases (their inputs are the committed
@@ -41,8 +41,6 @@ from clp_spark.route.fanout import (
     route_to_sinks,
     segment_expr,
     segment_summary,
-    sink_metrics,
-    sink_var_cardinality,
 )
 
 # above this many (logtype, lang, window) cells the driver-side bounds
@@ -183,13 +181,63 @@ def _write_summary_derived(
     )
 
 
+def _summary_collector(book_src: DataFrame):
+    """The segment summary of `book_src` (encoded, sinked rows) as a
+    collect callable plus what its driver-side consumers need:
+    (collect, summary_fields, ts_cols, seg_cols). summary_fields keeps
+    the Spark types of the un-collected summary.
+
+    TimestampType bounds are collected as epoch MICROS, not as
+    datetimes: toPandas renders timestamps in the session's
+    spark.sql.session.timeZone as naive wall times, and the pyarrow
+    writer's timestamp("us", tz="UTC") would re-read those wall times
+    as UTC — shifting the zone map by the UTC offset on any non-UTC
+    session and mis-pruning range queries. Integer micros are
+    timezone-free; pa.array interprets them as epoch values under the
+    declared tz=UTC type, which is exactly the instant Spark stores
+    internally."""
+    from pyspark.sql import types as T
+
+    summary = segment_summary(book_src)
+    ts_cols = [c for c in ("ts_min", "ts_max") if c in summary.columns]
+    seg_cols = ts_cols + (["ts_src"] if "ts_src" in summary.columns else [])
+    summary_fields = {f.name: f.dataType for f in summary.schema.fields}
+    micros_cols = [
+        c for c in ts_cols if isinstance(summary_fields[c], T.TimestampType)
+    ]
+    for c in micros_cols:
+        summary = summary.withColumn(c, F.unix_micros(F.col(c)))
+
+    def collect():
+        pdf = summary.toPandas()
+        for c in micros_cols:
+            # nullable Int64: an all-null-ts segment must round-trip
+            # as parquet null, not poison the column to float64
+            pdf[c] = pdf[c].astype("Int64")
+        return pdf
+
+    return collect, summary_fields, ts_cols, seg_cols
+
+
+def _var_cardinality(var_man: DataFrame):
+    """Distinct dictionary-var IDs per sink, from the (sink_id, seg_id,
+    var_id) var manifest — pandas (sink_id, var_cardinality)."""
+    return (
+        var_man.select("sink_id", "var_id")
+        .distinct()
+        .groupBy("sink_id")
+        .agg(F.count("*").alias("var_cardinality"))
+        .toPandas()
+    )
+
+
 def _write_metrics_driver(
-    summary_pdf, vcard_pdf, summary_fields, ts_cols, metrics_dir: str,
-    cfg: PipelineConfig,
+    summary_pdf, vcard_pdf, summary_fields, ts_cols, metrics_dir: str
 ) -> None:
     """Per-sink metrics aggregated driver-side from the segment summary
-    (rows/cardinality/byte sums over a tiny frame) + the var-cardinality
-    counts from the one remaining distributed bookkeeping aggregation."""
+    (rows/cardinality/byte sums over a tiny frame) + the per-sink var
+    cardinality. The only metrics writer: rebuild_metrics feeds it from
+    a committed archive (a resumed run, the GC refresh)."""
     import pandas as pd
     import pyarrow as pa
 
@@ -222,10 +270,8 @@ def _write_metrics_driver(
     types = {
         "sink_id": pa.int64(),
         "rows": pa.int64(),
-        # countDistinct in the Spark fallback (sink_metrics) emits
-        # LongType — the two writers must produce one schema, or a
-        # resume through phase 4 yields a metrics table strict readers
-        # can't union with a clean run's
+        # int64 like every other count: metrics tables from any run
+        # (and from the GC refresh) must union under strict readers
         "logtype_cardinality": pa.int64(),
         "n_encoded_vars": pa.int64(),
         "encoded_bytes": pa.int64(),
@@ -235,6 +281,24 @@ def _write_metrics_driver(
     }
     _write_driver_parquet(
         metrics_dir, {c: mdf[c] for c in out_cols}, types
+    )
+
+
+def rebuild_metrics(spark: SparkSession, sinks: DataFrame, out_dir: str) -> None:
+    """Per-sink metrics of the committed archive at `out_dir` (its
+    `sinks` rows, already read, and its var manifest) through the same
+    summary collect and writer the inline compress path uses — for a
+    run resumed after the route commit, and for the GC refresh."""
+    collect_summary, summary_fields, ts_cols, _ = _summary_collector(sinks)
+    var_man = spark.read.schema(
+        "sink_id long, seg_id long, var_id long"
+    ).parquet(os.path.join(out_dir, "manifest", "var"))
+    _write_metrics_driver(
+        collect_summary(),
+        _var_cardinality(var_man),
+        summary_fields,
+        ts_cols,
+        os.path.join(out_dir, "metrics"),
     )
 
 
@@ -444,8 +508,8 @@ def compress(
         None,
     )
 
-    # ---- phase 3: encode + route (salted fan-out, atomic overwrite) ----
-    encoded_schema = None
+    # ---- phase 3: encode + route (range fan-out, atomic overwrite) ----
+    metrics_src = None
     if "route" not in manifest.committed("route"):
         t0 = time.time()
         if lt_map is None:
@@ -474,17 +538,12 @@ def compress(
         encoded_schema = enc_sinked.schema
         bounds = (
             _route_bounds(route_counts, lt_map, cfg.num_sinks)
-            if (
-                route_counts is not None
-                and lt_map is not None
-                and os.environ.get("CLP_ROUTE_BOUNDS", "1") != "0"
-            )
+            if route_counts is not None and lt_map is not None
             else None
         )
         from concurrent.futures import ThreadPoolExecutor
 
         need_metrics = "metrics" not in manifest.committed("metrics")
-        t_m = time.time()
         if bounds is not None and bounds[1] > 0:
             # Analytic single-pass route: encode flows straight into the
             # boundary shuffle (no RangePartitioner sample pass, no
@@ -500,11 +559,12 @@ def compress(
             book_src = spark.read.schema(encoded_schema).parquet(sinks_dir)
             f_route_done = True
         else:
-            # Sampler route (no timestamp column, resume without counts,
-            # or above-cap dictionaries): persist the sinked rows so the
-            # sample pass, the write, and the bookkeeping aggregations
-            # compute the encode once, and run the route write
-            # CONCURRENTLY with the bookkeeping from driver threads.
+            # Sampler route (above-cap dictionaries, a resumed route
+            # without counts, or more than _MAX_BOUNDS_CELLS cells):
+            # persist the sinked rows so the sample pass, the write, and
+            # the bookkeeping aggregations compute the encode once, and
+            # run the route write CONCURRENTLY with the bookkeeping from
+            # driver threads.
             enc_sinked = enc_sinked.persist()
             book_src = enc_sinked
             f_route_done = False
@@ -517,27 +577,9 @@ def compress(
         # fixed scheduling seconds are charged to every cluster size
         # (they were the dominant term in the N→4N efficiency loss once
         # the vectorized tokenizer shrank the parallel fraction).
-        summary = segment_summary(book_src)
-        ts_cols = [c for c in ("ts_min", "ts_max") if c in summary.columns]
-        seg_cols = ts_cols + (["ts_src"] if "ts_src" in summary.columns else [])
-        summary_fields = {f.name: f.dataType for f in summary.schema.fields}
-        # TimestampType bounds are collected as epoch MICROS, not as
-        # datetimes: toPandas renders timestamps in the session's
-        # spark.sql.session.timeZone as naive wall times, and the
-        # pyarrow writer's timestamp("us", tz="UTC") would re-read
-        # those wall times as UTC — shifting the zone map by the UTC
-        # offset on any non-UTC session and mis-pruning range queries.
-        # Integer micros are timezone-free; pa.array interprets them
-        # as epoch values under the declared tz=UTC type, which is
-        # exactly the instant Spark stores internally.
-        from pyspark.sql import types as _T
-
-        _micros_cols = [
-            c for c in ts_cols
-            if isinstance(summary_fields[c], _T.TimestampType)
-        ]
-        for c in _micros_cols:
-            summary = summary.withColumn(c, F.unix_micros(F.col(c)))
+        collect_summary, summary_fields, ts_cols, seg_cols = _summary_collector(
+            book_src
+        )
 
         def _w_route():
             with step_timer("route.write"):
@@ -557,26 +599,15 @@ def compress(
         def _w_var():
             write_var_manifest(var_man, os.path.join(out_dir, "manifest", "var"))
 
-        def _w_varcard():
-            return (
-                var_man.select("sink_id", "var_id")
-                .distinct()
-                .groupBy("sink_id")
-                .agg(F.count("*").alias("var_cardinality"))
-                .toPandas()
-            )
-
         with ThreadPoolExecutor(max_workers=4) as pool:
             f_route = None if f_route_done else pool.submit(_w_route)
-            f_sum = pool.submit(summary.toPandas)
+            f_sum = pool.submit(collect_summary)
             f_var = pool.submit(_w_var)
-            f_vcard = pool.submit(_w_varcard) if need_metrics else None
+            f_vcard = (
+                pool.submit(_var_cardinality, var_man) if need_metrics else None
+            )
             with step_timer("route.summary_collect"):
                 summary_pdf = f_sum.result()
-            for c in _micros_cols:
-                # nullable Int64: an all-null-ts segment must round-trip
-                # as parquet null, not poison the column to float64
-                summary_pdf[c] = summary_pdf[c].astype("Int64")
             with step_timer("route.summary_derived_write"):
                 _write_summary_derived(
                     summary_pdf, summary_fields, seg_cols, out_dir, cfg
@@ -589,63 +620,42 @@ def compress(
             manifest.commit(
                 "route", "route", run_id, wall_ms=int(1000 * (time.time() - t0))
             )
+            # the metrics phase starts at the route commit, so the two
+            # phase walls in _manifest.jsonl never overlap
+            t_m = time.time()
             if f_vcard is not None:
-                with step_timer("route.vcard_wait_and_metrics_write"):
-                    _write_metrics_driver(
-                        summary_pdf,
-                        f_vcard.result(),
-                        summary_fields,
-                        ts_cols,
-                        metrics_dir,
-                        cfg,
+                with step_timer("route.vcard_wait"):
+                    metrics_src = (
+                        summary_pdf, f_vcard.result(), summary_fields, ts_cols,
                     )
-                manifest.commit(
-                    "metrics",
-                    "metrics",
-                    run_id,
-                    wall_ms=int(1000 * (time.time() - t_m)),
-                )
         var_man.unpersist()
         if not f_route_done:
             enc_sinked.unpersist()
-    if encoded_schema is None:
-        encoded_schema = add_seg_id(
-            add_sink_id(
-                encode_with_dicts(
-                    parsed_all.limit(0), lt_dict.limit(0), v_dict.limit(0)
-                ),
-                cfg.num_sinks,
-            ),
-            cfg.num_segments,
-        ).schema
-
-    encoded_sinks = spark.read.schema(encoded_schema).parquet(sinks_dir)
 
     # ---- phase 4: per-sink aggregates (the aggregate contract) ----
     if "metrics" not in manifest.committed("metrics"):
-        t0 = time.time()
-        m = sink_metrics(encoded_sinks).join(
-            sink_var_cardinality(encoded_sinks), "sink_id", "left"
-        ).na.fill({"var_cardinality": 0})
-        # same per-sink ts bounds (and column order) the driver path
-        # writes — a resume through this phase must not produce a
-        # metrics table missing ts_min/ts_max
-        for c in ("warc_ts", "ts_ms"):
-            if c in encoded_sinks.columns:
-                m = m.join(
-                    encoded_sinks.groupBy("sink_id").agg(
-                        F.min(c).alias("ts_min"), F.max(c).alias("ts_max")
+        if metrics_src is None:
+            # resume after the route commit: the same inputs, rebuilt
+            # from the committed sinks and var manifest
+            t_m = time.time()
+            encoded_schema = add_seg_id(
+                add_sink_id(
+                    encode_with_dicts(
+                        parsed_all.limit(0), lt_dict.limit(0), v_dict.limit(0)
                     ),
-                    "sink_id",
-                    "left",
-                ).select(
-                    "sink_id", "rows", "logtype_cardinality",
-                    "n_encoded_vars", "encoded_bytes", "raw_bytes",
-                    "ts_min", "ts_max", "var_cardinality",
-                )
-                break
-        m.write.mode("overwrite").parquet(metrics_dir)
-        manifest.commit("metrics", "metrics", run_id, wall_ms=int(1000 * (time.time() - t0)))
+                    cfg.num_sinks,
+                ),
+                cfg.num_segments,
+            ).schema
+            rebuild_metrics(
+                spark, spark.read.schema(encoded_schema).parquet(sinks_dir), out_dir
+            )
+        else:
+            with step_timer("metrics.write"):
+                _write_metrics_driver(*metrics_src, metrics_dir)
+        manifest.commit(
+            "metrics", "metrics", run_id, wall_ms=int(1000 * (time.time() - t_m))
+        )
 
     return {
         "run_id": run_id,

@@ -9,14 +9,19 @@ single job via partitionBy.
 
 Skew (north_rule requires explicit handling): template frequencies are
 Zipf-like, so a plain repartition("sink_id") would send the hot
-logtype's sink to one task. We detect hot logtypes with a cheap count
-aggregate and salt the shuffle key for those rows only, so the hot
-sink's data spreads over `num_salt_buckets` tasks while cold sinks stay
-un-salted (no extra files). AQE skew-join/coalesce stays on as backstop.
+logtype's sink to one task. Both routes instead range-partition the
+shuffle on (sink_id, seg_id, logtype_id[, ts]) plus a row-hash
+tiebreaker, which equalizes ROWS per task: a hot cell splits across
+contiguous partitions by the tiebreaker, with no salt column and no
+extra files. The analytic route computes those ranges exactly from the
+row counts the dictionary phase collects; the sampler route
+(repartitionByRange) serves the cases without counts — above-cap
+dictionaries, a resumed route, and more than 100k route cells.
 
-Per-sink aggregates (FIXTURES.md §3 sink_metrics) are the pipeline's
-aggregate contract: rows, logtype/var cardinalities, encoded byte sizes —
-all Catalyst partial+final hash aggregates.
+`segment_summary` is the one bookkeeping aggregation over routed rows:
+the logtype manifest, the ts zone map and the per-sink metrics
+(FIXTURES.md §3 sink_metrics, written by pipeline._write_metrics_driver)
+all derive from it.
 """
 
 from __future__ import annotations
@@ -116,32 +121,6 @@ def segment_summary(encoded_with_seg: DataFrame) -> DataFrame:
         # stats would be unsound)
         out = out.withColumn("ts_src", F.lit(ts_src))
     return out
-
-
-def detect_hot_logtypes(encoded: DataFrame, threshold_fraction: float) -> list[int]:
-    """Logtype IDs whose row share exceeds the threshold (driver-side list).
-
-    One cheap pre-aggregated count pass; the result is tiny (it is at most
-    1/threshold entries) so collecting it is safe at any scale.
-    """
-    counts = encoded.groupBy("logtype_id").count()
-    total = encoded.count()
-    hot = counts.filter(F.col("count") >= threshold_fraction * total)
-    return [r["logtype_id"] for r in hot.collect()]
-
-
-def hot_logtypes_from_dict(
-    logtype_dict: DataFrame, threshold_fraction: float
-) -> list[int]:
-    """Hot-template IDs straight from the dictionary's n_rows column —
-    zero extra scans of the data (build_logtype_dict counts ride along
-    with the distinct aggregation)."""
-    agg = logtype_dict.agg(F.sum("n_rows").alias("total")).collect()[0]
-    total = agg["total"] or 0
-    hot = logtype_dict.filter(
-        F.col("n_rows") >= F.lit(threshold_fraction * total)
-    )
-    return [r["logtype_id"] for r in hot.select("logtype_id").collect()]
 
 
 def murmur3_long(value: int, seed: int = 42) -> int:
@@ -288,12 +267,11 @@ def route_to_sinks(
     encoded: DataFrame,
     out_path: str,
     cfg: PipelineConfig,
-    hot_logtypes: list[int] | None = None,
     presinked: bool = False,
     bounds: tuple | None = None,
     logtype_count: int | None = None,
 ) -> None:
-    """Write encoded rows into per-sink parquet partitions, skew-salted.
+    """Write encoded rows into per-sink parquet partitions.
 
     presinked=True: `encoded` already carries sink_id (caller persisted
     it to also derive metrics without a sink read-back).
@@ -307,10 +285,8 @@ def route_to_sinks(
     logtype_count: the logtype dictionary's size; sizes the logtype_id
     bloom filter (see _write_sinks). None keeps parquet-mr's default.
 
-    hot_logtypes is accepted for API compatibility but unused: the range
-    partitioner below handles hot-template skew natively (rows equal on
-    every range key are split across partitions by the hash tiebreaker),
-    so no explicit salting pass is needed."""
+    Hot-template skew needs no salting pass: rows equal on every range
+    key are split across partitions by the hash tiebreaker."""
     df = encoded if presinked else add_sink_id(encoded, cfg.num_sinks)
 
     part_cols = ["sink_id"] + (["seg_id"] if "seg_id" in df.columns else [])
@@ -357,86 +333,4 @@ def route_to_sinks(
         cfg,
         part_cols,
         logtype_count,
-    )
-
-
-def sink_manifests(
-    encoded_with_sink: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Per-sink inverted indexes — the Spark analog of CLP's segment
-    indexes (reference: DictionaryWriter.hpp:72 per-dict segment ID sets;
-    Query.hpp:103-121 calculate_ids_of_matching_segments consumes them).
-
-    Returns (logtype_manifest, var_manifest):
-      logtype_manifest(sink_id, logtype_id) — distinct pairs
-      var_manifest(sink_id, var_id)         — distinct dict-var pairs
-    Both are plain tables (not array columns) so they scale to any
-    dictionary size; search semi-joins them to skip whole sinks."""
-    lt = encoded_with_sink.select("sink_id", "logtype_id").distinct()
-    var = (
-        encoded_with_sink.select(
-            "sink_id", F.explode("dict_var_ids").alias("var_id")
-        )
-        .distinct()
-    )
-    return lt, var
-
-
-def sink_summary(encoded_with_sink: DataFrame) -> DataFrame:
-    """ONE pass over the routed rows fusing the per-sink metric
-    aggregates with the logtype inverted index (round 2 ran them as two
-    separate scans of the persisted frame, plus a third for var
-    cardinality — the serial small jobs that eroded N→4N scaling and
-    the local[32] pipeline wall).
-
-    Output: sink_id, rows, n_encoded_vars, encoded_bytes, raw_bytes,
-    lt_set (sorted distinct logtype ids — safe as an array: the logtype
-    dictionary is CLP-small by design, unlike the var dict, which keeps
-    its pair-table manifest). Derive:
-      metrics  = select(..., size(lt_set) AS logtype_cardinality)
-      manifest = select(sink_id, explode(lt_set))
-    Optional min/max of `ts_col` ride along when present — the sink-level
-    timestamp zone map used for archive-style time pruning."""
-    aggs = [
-        F.count("*").alias("rows"),
-        F.sum(F.size("encoded_vars")).alias("n_encoded_vars"),
-        F.sum(F.expr("8 + 8 + 8 * size(encoded_vars)")).alias("encoded_bytes"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sort_array(F.collect_set("logtype_id")).alias("lt_set"),
-    ]
-    for c in ("warc_ts",):
-        if c in encoded_with_sink.columns:
-            aggs += [F.min(c).alias("ts_min"), F.max(c).alias("ts_max")]
-    return encoded_with_sink.groupBy("sink_id").agg(*aggs)
-
-
-def sink_metrics(encoded_with_sink: DataFrame) -> DataFrame:
-    """Per-sink aggregate contract (exact-match vs oracle).
-
-    encoded_bytes models the reference's columnar cost: 8 bytes per
-    (timestamp, logtype_id, encoded var) slot —
-    streaming_archive/writer/File.hpp:257-259's three parallel columns.
-    """
-    return (
-        encoded_with_sink.groupBy("sink_id")
-        .agg(
-            F.count("*").alias("rows"),
-            F.countDistinct("logtype_id").alias("logtype_cardinality"),
-            F.sum(F.size("encoded_vars")).alias("n_encoded_vars"),
-            F.sum(F.expr("8 + 8 + 8 * size(encoded_vars)")).alias("encoded_bytes"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-        )
-        .orderBy("sink_id")
-    )
-
-
-def sink_var_cardinality(encoded_with_sink: DataFrame) -> DataFrame:
-    """Distinct dictionary-var IDs per sink (separate agg: needs explode)."""
-    return (
-        encoded_with_sink.select(
-            "sink_id", F.explode("dict_var_ids").alias("var_id")
-        )
-        .groupBy("sink_id")
-        .agg(F.countDistinct("var_id").alias("var_cardinality"))
-        .orderBy("sink_id")
     )

@@ -73,8 +73,8 @@ def _rewrite_filtered(man_dir: str, keep_mask_fn) -> None:
 def _rewrite_filtered_spark(spark, man_dir: str, dead: set) -> None:
     """Distributed manifest rewrite: anti-join against the (tiny) dead
     (sink_id, seg_id) set, preserve the var_id range-partitioned sort
-    and its parquet bloom (the pruning layout sink_manifests documents,
-    pipeline.py _w_var)."""
+    and its parquet bloom (the pruning layout that
+    pipeline.write_var_manifest writes)."""
     import pyspark.sql.functions as F
 
     df = spark.read.parquet(man_dir)
@@ -301,12 +301,10 @@ def expire_segments(
 
 
 def _refresh_metrics(spark, out_dir: str) -> None:
-    """Recompute per-sink metrics from the surviving sink data — one
-    column-pruned scan, same aggregate shapes as compress()'s
-    bookkeeping (route/fanout.py sink_metrics + sink_var_cardinality)."""
-    import pyspark.sql.functions as F
-
-    from clp_spark.route.fanout import sink_metrics, sink_var_cardinality
+    """Recompute per-sink metrics from the surviving sinks and var
+    manifest with compress()'s own metrics writer, so a refreshed table
+    keeps the schema (ts bounds included) of a fresh one."""
+    from clp_spark.pipeline import rebuild_metrics
 
     sinks_dir = os.path.join(out_dir, "sinks")
     metrics_dir = os.path.join(out_dir, "metrics")
@@ -333,27 +331,4 @@ def _refresh_metrics(spark, out_dir: str) -> None:
             compression="zstd",
         )
         return
-    enc = spark.read.parquet(sinks_dir)
-    # partition-column inference types sink_id/seg_id int32; compress()
-    # reads with the explicit encoded schema (bigint) — cast back so the
-    # refreshed metrics parquet keeps the original column types
-    for pcol in ("sink_id", "seg_id"):
-        if pcol in enc.columns:
-            enc = enc.withColumn(pcol, F.col(pcol).cast("long"))
-    m = sink_metrics(enc).join(
-        sink_var_cardinality(enc), "sink_id", "left"
-    ).withColumn(
-        "var_cardinality", F.coalesce("var_cardinality", F.lit(0))
-    )
-    pdf = m.toPandas()
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for entry in os.scandir(metrics_dir):
-        if entry.is_file():
-            os.unlink(entry.path)
-    pq.write_table(
-        pa.Table.from_pandas(pdf, preserve_index=False),
-        os.path.join(metrics_dir, "part-00000.parquet"),
-        compression="zstd",
-    )
+    rebuild_metrics(spark, spark.read.parquet(sinks_dir), out_dir)

@@ -61,27 +61,6 @@ def test_encode_paths_identical(spark, pages_df):
     parsed.unpersist()
 
 
-def test_encode_arrow_matches_pandas_engine(spark, pages_df):
-    """The vectorized Arrow encode kernel must be row-identical to the
-    row-at-a-time pandas reference engine (same contract as the
-    tokenizer's engine parity)."""
-    from clp_spark.dicts.build import encode_with_maps, encode_with_maps_pandas
-
-    parsed = tokenize_df(pages_df).persist()
-    lt_df, v_df, lt_map, v_map = build_dicts_small(parsed)
-    a = encode_with_maps(parsed, lt_map, v_map)
-    b = encode_with_maps_pandas(parsed, lt_map, v_map)
-    assert a.schema == b.schema
-    key = lambda r: (
-        r["url"],
-        r["logtype_id"],
-        tuple(r["encoded_vars"]),
-        tuple(r["dict_var_ids"]),
-    )
-    assert sorted(map(key, a.collect())) == sorted(map(key, b.collect()))
-    parsed.unpersist()
-
-
 def test_encode_arrow_empty_and_all_dict_rows(spark):
     """Edge shapes: rows with zero vars, rows whose vars are ALL
     dict-typed, and an empty frame."""

@@ -128,8 +128,15 @@ def test_metrics_refresh(spark, archive):
     out, _res = archive
     zm = _zone_map(spark, out)
     cutoff = pd.Timestamp(zm["ts_max"].quantile(0.5))
+    before = spark.read.parquet(os.path.join(out, "metrics")).schema
     expire_segments(out, cutoff, spark=spark)
-    metrics = spark.read.parquet(os.path.join(out, "metrics")).toPandas()
+    refreshed = spark.read.parquet(os.path.join(out, "metrics"))
+    # the refresh goes through compress()'s metrics writer: same columns
+    # (ts bounds included), same types
+    assert [(f.name, f.dataType.simpleString()) for f in refreshed.schema] == [
+        (f.name, f.dataType.simpleString()) for f in before
+    ]
+    metrics = refreshed.toPandas()
     surviving_rows = int(
         spark.read.parquet(os.path.join(out, "sinks")).count()
     )

@@ -253,20 +253,21 @@ def test_zone_map_instants_survive_non_utc_session(spark, pages_pdf, tmp_path_fa
 
 def test_metrics_fallback_schema_matches_driver_path(spark, pages_pdf, tmp_path_factory):
     """A run that crashes between the route commit and the metrics
-    commit resumes through the phase-4 Spark aggregation; the metrics
-    table it writes must be column- and type-identical to the driver
-    writer's (same ts bounds, same LongType cardinality) so strict
-    readers can union metrics across runs."""
+    commit resumes through phase 4, which rebuilds the metrics inputs
+    from the committed sinks and var manifest; the metrics table it
+    writes must equal a clean run's in schema and in every row so
+    strict readers can union metrics across runs."""
     import json as _json
 
     df = spark.createDataFrame(pages_pdf).repartition(4)
     out = str(tmp_path_factory.mktemp("metrics_schema_out"))
     compress(spark, df, out, CFG)
-    driver_schema = spark.read.parquet(os.path.join(out, "metrics")).schema
-    driver_rows = {
-        r["sink_id"]: (r["rows"], r["logtype_cardinality"], r["ts_min"], r["ts_max"])
-        for r in spark.read.parquet(os.path.join(out, "metrics")).collect()
-    }
+    driver = spark.read.parquet(os.path.join(out, "metrics"))
+    driver_schema = driver.schema
+    driver_rows = {r["sink_id"]: tuple(r) for r in driver.collect()}
+    assert {"var_cardinality", "n_encoded_vars", "encoded_bytes", "raw_bytes"} <= set(
+        driver.columns
+    )
 
     # simulate the crash window: metrics dir gone, commit record erased
     shutil.rmtree(os.path.join(out, "metrics"))
@@ -278,16 +279,41 @@ def test_metrics_fallback_schema_matches_driver_path(spark, pages_pdf, tmp_path_
             if r.get("phase") != "metrics":
                 f.write(_json.dumps(r) + "\n")
 
-    compress(spark, df, out, CFG)  # resume → phase-4 fallback writer
+    compress(spark, df, out, CFG)  # resume → phase 4
     fb = spark.read.parquet(os.path.join(out, "metrics"))
     assert [(f.name, f.dataType.simpleString()) for f in fb.schema] == [
         (f.name, f.dataType.simpleString()) for f in driver_schema
     ]
-    fb_rows = {
-        r["sink_id"]: (r["rows"], r["logtype_cardinality"], r["ts_min"], r["ts_max"])
-        for r in fb.collect()
-    }
-    assert fb_rows == driver_rows
+    assert {r["sink_id"]: tuple(r) for r in fb.collect()} == driver_rows
+
+
+def test_phase_walls_disjoint(spark, pages_pdf, tmp_path_factory):
+    """The phase walls in _manifest.jsonl (one interval per phase,
+    (ts - wall_ms, ts) over its commit records) do not overlap, so
+    they sum to at most the wall time of compress()."""
+    import time
+
+    df = spark.createDataFrame(pages_pdf).repartition(4)
+    out = str(tmp_path_factory.mktemp("phase_walls_out"))
+    t0 = time.time()
+    res = compress(spark, df, out, CFG)
+    wall_ms = 1000.0 * (time.time() - t0)
+
+    spans: dict[str, list[float]] = {}
+    with open(res["manifest"]) as f:
+        for line in f:
+            rec = json.loads(line)
+            end = 1000.0 * rec["ts"]
+            start = end - rec["wall_ms"]
+            lo_hi = spans.setdefault(rec["phase"], [start, end])
+            lo_hi[0], lo_hi[1] = min(lo_hi[0], start), max(lo_hi[1], end)
+    phases = ["parse", "dicts", "route", "metrics"]
+    assert sorted(spans) == sorted(phases)
+    for i, a in enumerate(phases):
+        for b in phases[i + 1 :]:
+            overlap = min(spans[a][1], spans[b][1]) - max(spans[a][0], spans[b][0])
+            assert overlap <= 50.0, (a, b, spans)
+    assert sum(hi - lo for lo, hi in spans.values()) <= wall_ms, (spans, wall_ms)
 
 
 def test_single_row_sink_file_is_small(spark, pages_pdf, tmp_path_factory):

@@ -145,10 +145,10 @@ class TestTokenizer:
             assert decode_message(o[0], o[1]) == msg
 
 
-class TestSqlEngine:
-    """The opt-in JVM-expression engine (CLP_SPARK_TOKENIZER=sql,
-    measured slower than the default Python engine) agrees exactly with
-    the default engine and the oracle (tokenizer.py `tokenize_exprs`)."""
+class TestTokenizeDf:
+    """`tokenize_df` through Spark (the npscan kernel over mapInArrow,
+    and its per-row `parse_one` fallback for batches holding control
+    bytes 0x00-0x03) agrees exactly with the oracle."""
 
     def _check_corpus(self, spark, texts):
         import pandas as pd
@@ -157,7 +157,7 @@ class TestSqlEngine:
 
         df = spark.createDataFrame(pd.DataFrame({"text": list(texts)}))
         rows = (
-            tokenize_df(df, passthrough=["text"], engine="sql")
+            tokenize_df(df, passthrough=["text"])
             .orderBy("text")
             .collect()
         )
@@ -190,6 +190,7 @@ class TestSqlEngine:
                 "dots 1.2.3.4 and a-b-1 and _x_9_",
                 "-9223372036854775808 9223372036854775807"
                 " 9223372036854775808 -9223372036854775809",
+                "ctl \x01 byte x=7 1.5",
             ],
         )
 
